@@ -12,6 +12,7 @@ the run record: host fingerprint, kernel probes (single-process always;
 the ``nproc``-process VM canary with ``--trace 1``), per-pass figures,
 the JVM's peak RSS and any failed checks.  All inputs, Spark scratch
 and spans are written under ``perfbench/.work`` in the repository.
+Every process the run starts has ended before it exits (``procs.py``).
 ``--size tiny`` shrinks every input for the self-check
 (``perfbench/selfcheck.py``).
 """
@@ -95,6 +96,18 @@ def main(argv: list[str] | None = None) -> int:
     work = os.path.join(HERE, ".work")
     _prepare_env(work)
 
+    import procs
+
+    procs.become_subreaper()
+    try:
+        return _measure(args, work)
+    finally:
+        leftover = procs.stop_all()
+        if leftover:
+            print(f"perfbench: stopped leftover processes {leftover}", file=sys.stderr)
+
+
+def _measure(args: argparse.Namespace, work: str) -> int:
     import corpus
     import host
     import spec
@@ -117,11 +130,11 @@ def main(argv: list[str] | None = None) -> int:
             run.setup()
             if args.trace:
                 def alternate(i):
-                    # untraced, traced, traced, untraced, ...: a drift
-                    # over the run cancels out of the traced-untraced gap
-                    tracer.traced = i % 4 in (1, 2)
+                    # untraced, traced, untraced, ...: a steady drift over
+                    # the run cancels out of the traced-untraced gap
+                    tracer.traced = i % 2 == 1
                     return run.one_pass(i, "traced" if tracer.traced else "untraced")
-                run.timed_passes(alternate, min_passes=4)
+                run.timed_passes(alternate, min_passes=3)
                 tracer.traced = False
             else:
                 run.timed_passes(lambda i: run.one_pass(i, "timed"), min_passes=1)
@@ -131,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
         _stop(run)
     if args.trace:
         sample = corpus.probe_sample(work, sizes["images"], sizes["probe"], cores)
-        record["probes"] = host.kernel_probes(sample, reps=2, procs=cores)
+        record["probes"] = host.kernel_probes(sample, reps=1, procs=cores)
     else:
         sample = corpus.probe_sample(work, sizes["images"], sizes["canary"], cores)
         record["probes"] = host.kernel_probes(sample, reps=1)

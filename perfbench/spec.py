@@ -103,6 +103,7 @@ WHY = {
     "images_cli": "both CLI image routes (parquet default, --format iceberg) on one seeded "
                   "4000-image corpus: per-job floor, decode/caption kernels, bucketed "
                   "checkpoint write",
-    "queries_sf0.1": "the seven bench.py headline queries on sf0.1-shaped tables: no decode or "
-                     "checkpoint, job count and knn/minhash kernels dominate",
+    "queries_sf0.1": "the seven bench.py headline queries on fixed sf0.1-shaped tables (seed 42: "
+                     "--seed does not vary this workload): no decode or checkpoint, job count "
+                     "and knn/minhash kernels dominate",
 }
