@@ -14,9 +14,14 @@ validation gates from BASELINE.json input_hint:
                         lossless path)
 
 Design: ``bytes`` is the widest column in the table, so this pass runs
-FIRST on the raw scan; :func:`decode_and_project` emits the narrow
-columns + stats in ONE mapInPandas, so the table is scanned once and
-the binary payload never crosses a shuffle (SURVEY.md §7 risk list).
+FIRST on the raw scan and also computes the caption columns
+(text.fast.caption_columns), so each row crosses into Python once.  Two
+entry points share one per-batch body (:func:`_decode_batch`):
+:func:`decode_and_project` over any DataFrame, and :func:`decode_scan`,
+which reads parquet files with pyarrow inside the workers.  Each emits
+the narrow columns + stats + captions in ONE mapInPandas, so the table
+is scanned once and the binary payload never crosses a shuffle
+(SURVEY.md §7 risk list).
 """
 
 from __future__ import annotations
@@ -35,7 +40,6 @@ STATS_FIELDS = (
     "phash_recomputed long, brightness double, pixel_std double, "
     "aspect_ratio double, is_grayscale boolean, blur_score double"
 )
-STATS_SCHEMA = "image_id string, " + STATS_FIELDS
 
 DARK_THRESHOLD = 50.0
 LIGHT_THRESHOLD = 205.0
@@ -155,8 +159,8 @@ def _stats_arrays(blobs, ws, hs, fmts) -> dict[str, np.ndarray]:
 
 
 def _stats_for_batch(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
-    """Pandas-batch wrapper over :func:`_stats_arrays` (the bench probe
-    and the mapInPandas passes call this with a pandas DataFrame)."""
+    """Pandas-batch wrapper over :func:`_stats_arrays` (the single-
+    process kernel probes of bench.py and perfbench call this)."""
     return _stats_arrays(
         pdf["bytes"].to_numpy(),
         pdf["w"].to_numpy(),
@@ -205,33 +209,47 @@ _PKG_ROOT = __import__("os").path.dirname(
 )
 
 
-def decode_stats(df: DataFrame) -> DataFrame:
-    """Per-image stats only (image_id + stats); join back on image_id."""
-    _pkg_root = _PKG_ROOT
+def _out_columns(fields, text_col: str | None) -> tuple[list[str], str]:
+    """(narrow source columns, output DDL) of a decode pass over the
+    source ``fields``: ``bytes`` dies at the scan, the stats follow, then
+    the caption columns of ``text_col`` unless it is None.  A source
+    column named like a computed column is replaced by it."""
+    from ..text.fast import CAPTION_FIELDS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys as _sys
-
-        if _pkg_root not in _sys.path:
-            _sys.path.insert(0, _pkg_root)
-        from sparkclean.images.decode import _stats_for_batch
-
-        for pdf in batches:
-            out = {"image_id": pdf["image_id"]}
-            out.update(_stats_for_batch(pdf))
-            yield pd.DataFrame(out)
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, STATS_SCHEMA)
+    names = [f.name for f in fields]
+    if text_col is not None and text_col not in names:
+        raise ValueError(f"no text column {text_col!r} among {names}")
+    computed = STATS_FIELDS + (", " + CAPTION_FIELDS if text_col is not None else "")
+    computed_names = {c.split()[0] for c in computed.split(", ")}
+    narrow = [f for f in fields if f.name != "bytes" and f.name not in computed_names]
+    ddl = [f"{f.name} {f.dataType.simpleString()}" for f in narrow] + [computed]
+    return [f.name for f in narrow], ", ".join(ddl)
 
 
-def decode_and_project(df: DataFrame) -> DataFrame:
-    """One-scan variant: narrow columns + stats out of a single
-    mapInPandas — the table is read once, ``bytes`` dies at the scan,
-    and no join/shuffle is needed downstream.  This is the 100 TB shape.
+def _decode_batch(cols: dict, blobs, text_col: str | None) -> pd.DataFrame:
+    """The one per-batch body of both decode entry points: the narrow
+    source columns, the image stats of ``blobs`` and, unless
+    ``text_col`` is None, the caption columns of that column."""
+    from ..text.fast import caption_columns
+
+    out = dict(cols)
+    out.update(
+        _stats_arrays(
+            blobs, cols["w"].to_numpy(), cols["h"].to_numpy(), cols["fmt"].to_numpy()
+        )
+    )
+    if text_col is not None:
+        out.update(caption_columns(cols[text_col]))
+    return pd.DataFrame(out)
+
+
+def decode_and_project(df: DataFrame, text_col: str = "caption") -> DataFrame:
+    """DataFrame route: narrow columns + stats + the caption columns of
+    ``text_col`` out of ONE mapInPandas — the table is read once,
+    ``bytes`` dies at the scan, each row crosses into Python once, and
+    no join/shuffle is needed downstream.  This is the 100 TB shape.
     """
-    narrow_cols = [c for c in df.columns if c != "bytes"]
-    schema_prefix = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != "bytes")
-    schema = schema_prefix + ", " + STATS_FIELDS
+    narrow_cols, schema = _out_columns(df.schema.fields, text_col)
     _pkg_root = _PKG_ROOT
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -239,12 +257,12 @@ def decode_and_project(df: DataFrame) -> DataFrame:
 
         if _pkg_root not in _sys.path:
             _sys.path.insert(0, _pkg_root)
-        from sparkclean.images.decode import _stats_for_batch
+        from sparkclean.images.decode import _decode_batch
 
         for pdf in batches:
-            out = {c: pdf[c] for c in narrow_cols}
-            out.update(_stats_for_batch(pdf))
-            yield pd.DataFrame(out)
+            yield _decode_batch(
+                {c: pdf[c] for c in narrow_cols}, pdf["bytes"].to_numpy(), text_col
+            )
 
     return df.mapInPandas(run, schema)
 
@@ -252,7 +270,7 @@ def decode_and_project(df: DataFrame) -> DataFrame:
 def decode_scan(
     spark, path: str, files_per_task: int = 1, with_caption_features: bool = False
 ) -> DataFrame:
-    """Python-native scan variant: workers read the parquet files
+    """Python-native scan route: workers read the parquet files
     directly with pyarrow, so the multi-KB ``bytes`` column never
     crosses the JVM→Python socket (measured as a hard ~0.5 GB/s
     aggregate wall in local mode; on a real cluster the same pattern
@@ -261,66 +279,30 @@ def decode_scan(
     Spark still owns the file-split assignment, retries, and everything
     downstream; this is the standard vectorized-python-reader shape for
     binary-heavy tables.  Emits the same schema as
-    :func:`decode_and_project`.
+    :func:`decode_and_project` over the ``caption`` column, whose caption
+    columns come only with ``with_caption_features``.
     """
     import glob as _glob
 
     import pyarrow.parquet as _pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import StructField
 
     files = sorted(_glob.glob(f"{path.rstrip('/')}/*.parquet"))
     if not files:
         raise ValueError(f"no parquet files under {path}")
-    arrow_schema = _pq.read_schema(files[0])
-    narrow_cols = [n for n in arrow_schema.names if n != "bytes"]
-    spark_types = {}
-    import pyarrow as _pa
-
-    for f in arrow_schema:
-        if f.name == "bytes":
-            continue
-        t = f.type
-        if _pa.types.is_string(t) or _pa.types.is_large_string(t):
-            s = "string"
-        elif _pa.types.is_int64(t):
-            s = "bigint"
-        elif _pa.types.is_int32(t):
-            s = "int"
-        elif _pa.types.is_float64(t):
-            s = "double"
-        elif _pa.types.is_float32(t):
-            s = "float"
-        elif _pa.types.is_boolean(t):
-            s = "boolean"
-        elif _pa.types.is_binary(t) or _pa.types.is_large_binary(t):
-            s = "binary"
-        elif _pa.types.is_int16(t):
-            s = "smallint"
-        elif _pa.types.is_int8(t):
-            s = "tinyint"
-        elif _pa.types.is_date(t):
-            s = "date"
-        elif _pa.types.is_timestamp(t):
-            s = "timestamp"
-        elif _pa.types.is_large_string(t):
-            s = "string"
-        else:
-            # numpy dtype names like 'bool_'/'object' are NOT Spark DDL —
-            # fail with the column named instead of a ParseException later
+    fields = []
+    for f in _pq.read_schema(files[0]):
+        try:
+            fields.append(StructField(f.name, from_arrow_type(f.type)))
+        except TypeError as e:
+            # fail with the column named instead of a bare type error
             raise ValueError(
-                f"decode_scan cannot map arrow type {t} of column "
+                f"decode_scan cannot map arrow type {f.type} of column "
                 f"{f.name!r} to a Spark type; drop or cast it first"
-            )
-        spark_types[f.name] = s
-    schema = (
-        ", ".join(f"{c} {spark_types[c]}" for c in narrow_cols) + ", " + STATS_FIELDS
-    )
-    if with_caption_features:
-        schema += (
-            ", n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"
-            " punct_ratio double, upper_ratio double, repetition_ratio double,"
-            " stopword_ratio double, pred_lang string, ppl double,"
-            " label int, pred_probs array<double>"
-        )
+            ) from e
+    text_col = "caption" if with_caption_features else None
+    narrow_cols, schema = _out_columns(fields, text_col)
 
     # Task granularity: one task per tiny file starves on per-task fixed
     # costs (a 60k-image corpus in 256 x 234-row files spent 2.4x longer
@@ -352,7 +334,7 @@ def decode_scan(
 
         if _pkg_root not in _sys.path:
             _sys.path.insert(0, _pkg_root)
-        from sparkclean.images.decode import _binary_views, _stats_arrays
+        from sparkclean.images.decode import _binary_views, _decode_batch
 
         for pdf in batches:
             for fname in pdf["file"]:
@@ -364,28 +346,13 @@ def decode_scan(
                 # 32-process A/B (mmap measured slightly worse under
                 # concurrency: page-fault path vs readahead).
                 tbl = pq.read_table(fname, use_threads=False)
-                out = {c: tbl.column(c).to_pandas() for c in narrow_cols}
                 # blobs as zero-copy views of the Arrow buffer — the
                 # multi-KB payload is never copied into Python bytes
-                stats = _stats_arrays(
+                yield _decode_batch(
+                    {c: tbl.column(c).to_pandas() for c in narrow_cols},
                     _binary_views(tbl.column("bytes")),
-                    out["w"].to_numpy(),
-                    out["h"].to_numpy(),
-                    out["fmt"].to_numpy(),
+                    text_col,
                 )
-                out.update(stats)
-                if with_caption_features:
-                    from sparkclean.text.fast import (
-                        caption_features_batch,
-                        label_and_probs_batch,
-                    )
-
-                    feats = caption_features_batch(out["caption"].tolist())
-                    label, probs = label_and_probs_batch(feats)
-                    out.update(feats)
-                    out["label"] = label
-                    out["pred_probs"] = list(probs)
-                yield pd.DataFrame(out)
 
     return fdf.mapInPandas(run, schema)
 

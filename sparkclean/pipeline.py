@@ -7,9 +7,13 @@ write.
 
 This is exactly the 2-pass batched shape of the reference
 (experimental/label_issues_batched.py:43-227 — see SURVEY.md §3.4), with
-Spark aggregations replacing the streaming accumulators.  Everything up
-to the bottom-n selection is a single whole-stage-codegen projection per
-pass; the pseudo-label scorer weights are frozen literals (the "broadcast
+Spark aggregations replacing the streaming accumulators.  Features,
+pseudo-label and pred_probs come from one Arrow stage
+(text.fast.caption_columns): :func:`_fast_label_frame` for text-only
+frames, the decode stage itself for the two image routes, which then
+share one post-scan body (:func:`_score_images`).  Thresholds, issue
+count and the exact bottom-n run in Catalyst on the cached narrow frame.
+The pseudo-label scorer weights are frozen literals (the "broadcast
 model table" of SURVEY.md §2.12).
 
 ``oracle_sql_for`` emits the DuckDB twin of the whole pipeline, built
@@ -18,16 +22,15 @@ from the same per-stage SQL generators so the two cannot drift.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
 from .quality.issues import bottom_n_flags
 from .quality.scores import boosted_predicted_label, predicted_label, self_confidence
 from .quality.thresholds import get_confident_thresholds
-from .text.langid import langid_markers_col
-from .text.ppl import ppl_hash_col, ppl_hash_sql
-from .text.rules import quality_features_sql_exprs, with_quality_features
+from .text.ppl import ppl_hash_sql
+from .text.rules import quality_features_sql_exprs
 from .text.scrub import scrub_col, scrub_sql
 
 NUM_CLASSES = 3  # 0=good, 1=low_quality, 2=wrong_language
@@ -45,51 +48,19 @@ MAX_REPETITION_GOOD = 0.5
 MAX_DIGIT_GOOD = 0.3
 
 
-def _features(df: DataFrame, text_col: str) -> DataFrame:
-    from .skew import ensure_parallelism
-
-    out = with_quality_features(ensure_parallelism(df), text_col)
-    return out.withColumn("pred_lang", langid_markers_col(F.col(text_col))).withColumn(
-        "ppl", ppl_hash_col(F.col(text_col))
-    )
-
-
-def _logit(w: dict) -> Column:
-    f_len = F.least(F.col("n_words").cast("double"), F.lit(50.0)) / F.lit(50.0)
-    en = F.when(F.col("pred_lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0))
-    lppl = F.log(F.col("ppl")) / F.lit(10.0)
-    return (
-        F.lit(float(w["bias"]))
-        + F.lit(float(w["f_len"])) * f_len
-        + F.lit(float(w["rep"])) * F.col("repetition_ratio")
-        + F.lit(float(w["digit"])) * F.col("digit_ratio")
-        + F.lit(float(w["punct"])) * F.col("punct_ratio")
-        + F.lit(float(w["stop"])) * F.col("stopword_ratio")
-        + F.lit(float(w["en"])) * en
-        + F.lit(float(w["lppl"])) * lppl
-    )
-
-
 def _fast_label_frame(df: DataFrame, text_col: str) -> DataFrame:
-    """Arrow fast-path twin of ``_with_label_and_probs(_features(df, c))``
-    — one mapInPandas stage computes every caption feature, the pseudo-
-    label and pred_probs via text.fast (same formulas, same md5 table,
-    same tie-breaks; parity asserted by tests/test_text_parity and the
-    DuckDB gate incl. the adversarial zoo corpus).  Replaces ~10
-    interpreted Catalyst projections (per-bigram md5, marker-set
-    filters) with one vectorized Python stage — the same dataflow the
-    image pipeline has always used (images.decode.decode_scan
-    with_caption_features=True).
-
-    Null-text parity (pinned against the Catalyst/DuckDB twins):
-    ratios/stopword/repetition coalesce to 0.0, pred_lang='und', ppl is
-    the fallback, n_chars/n_words stay NULL, and the scorer's f_len term
-    is 1.0 (Spark ``least`` SKIPS nulls: least(NULL, 50)/50 = 1) — fed
-    here by patching n_words to 50 for null rows before the scorer.
-    """
+    """The caption route of a text-only frame: one mapInPandas stage
+    appends every caption feature, the pseudo-label and pred_probs via
+    text.fast.caption_columns (the twin of the Catalyst builders in
+    text.rules / text.langid / text.ppl and the DuckDB oracle — same
+    formulas, same md5 table, same tie-breaks, same NULL-text semantics;
+    parity asserted by tests/test_text_parity and the DuckDB gate incl.
+    the adversarial zoo corpus).  The image routes get the same columns
+    from their decode stage (images.decode)."""
     import os as _os
 
     from .skew import ensure_parallelism
+    from .text.fast import CAPTION_FIELDS
 
     # worker-side import root: the nested `run` below is cloudpickled by
     # VALUE, but the text.fast kernels it calls live in this package —
@@ -99,85 +70,31 @@ def _fast_label_frame(df: DataFrame, text_col: str) -> DataFrame:
     _pkg_root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
 
     src = ensure_parallelism(df)
-    _out_names = (
-        "n_chars", "n_words", "digit_ratio", "alpha_ratio", "punct_ratio",
-        "upper_ratio", "repetition_ratio", "stopword_ratio", "pred_lang",
-        "ppl", "label", "pred_probs",
-    )
     # a source column colliding with a feature name (e.g. documents'
-    # own n_chars) is replaced by the computed feature — the Catalyst
-    # path appended a duplicate-named column instead, which nothing
-    # downstream could reference anyway
-    cols = [c for c in src.columns if c not in _out_names]
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema
-        if f.name not in _out_names
-    )
-    schema = base_ddl + (
-        ", n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"
-        " punct_ratio double, upper_ratio double, repetition_ratio double,"
-        " stopword_ratio double, pred_lang string, ppl double,"
-        " label int, pred_probs array<double>"
+    # own n_chars, or a caller's label/pred_probs) is replaced by the
+    # computed column
+    out_names = {f.split()[0] for f in CAPTION_FIELDS.split(", ")}
+    base = [f for f in src.schema if f.name not in out_names]
+    cols = [f.name for f in base]
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in base] + [CAPTION_FIELDS]
     )
 
     def run(batches):
         import sys
 
-        import numpy as np
         import pandas as pd
 
         if _pkg_root not in sys.path:
             sys.path.insert(0, _pkg_root)
-        from sparkclean.text.fast import (
-            caption_features_batch,
-            label_and_probs_batch,
-        )
+        from sparkclean.text.fast import caption_columns
 
         for pdf in batches:
             out = {c: pdf[c] for c in cols}
-            texts = pdf[text_col]
-            feats = caption_features_batch(texts.tolist())
-            null_mask = texts.isna().to_numpy()
-            if null_mask.any():
-                # f_len = 1.0 for null text (least-skips-null semantics)
-                patched = dict(feats)
-                nw = feats["n_words"].copy()
-                nw[null_mask] = 50
-                patched["n_words"] = nw
-                label, probs = label_and_probs_batch(patched)
-                # n_chars / n_words are NULL for null text (length(NULL))
-                feats["n_chars"] = pd.arrays.IntegerArray(
-                    feats["n_chars"].astype(np.int64), null_mask.copy()
-                )
-                feats["n_words"] = pd.arrays.IntegerArray(
-                    feats["n_words"].astype(np.int64), null_mask.copy()
-                )
-            else:
-                label, probs = label_and_probs_batch(feats)
-            out.update(feats)
-            out["label"] = label
-            out["pred_probs"] = list(probs)
+            out.update(caption_columns(pdf[text_col]))
             yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema)
-
-
-def _with_label_and_probs(df: DataFrame) -> DataFrame:
-    exps = [F.exp(_logit(w)) for w in WEIGHTS]
-    total = exps[0] + exps[1] + exps[2]
-    probs = F.array(*[e / total for e in exps])
-    label = (
-        F.when(F.col("pred_lang") != "en", F.lit(2))
-        .when(
-            (F.col("n_words") < MIN_WORDS_GOOD)
-            | (F.col("repetition_ratio") > MAX_REPETITION_GOOD)
-            | (F.col("digit_ratio") > MAX_DIGIT_GOOD),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    return df.withColumn("pred_probs", probs).withColumn("label", label)
 
 
 def caption_scores(
@@ -186,14 +103,24 @@ def caption_scores(
     text_col: str = "text",
     stage_times: dict | None = None,
 ) -> DataFrame:
-    """Caption quality dataflow; returns the input columns plus label,
-    quality_score (unrounded), is_label_issue, keep, scrubbed_text.
+    """Caption quality dataflow; returns the input columns plus the
+    caption features, label, quality_score (unrounded), is_label_issue,
+    keep, scrubbed_text.  Features are always computed here (one Arrow
+    stage, :func:`_fast_label_frame`); see :func:`_score_labeled` for
+    the job structure, cache ownership and ``stage_times``."""
+    return _score_labeled(_fast_label_frame(df, text_col), id_col, text_col, stage_times)
 
-    Job structure (the 2-pass batched shape): one projection builds
-    features+probs (cached), pass-1 agg collects K=3 thresholds, pass-2
-    agg counts issues, then the exact bottom-n selection and the scrub
-    projection.  All aggregations are map-side partial; nothing wide
-    shuffles.
+
+def _score_labeled(
+    feats: DataFrame, id_col: str, text_col: str, stage_times: dict | None = None
+) -> DataFrame:
+    """Threshold / issue / bottom-n scoring of a frame that already
+    carries ``label`` and ``pred_probs`` (text.fast.caption_columns).
+
+    Job structure (the 2-pass batched shape): ``feats`` is cached,
+    pass-1 agg collects K=3 thresholds, pass-2 agg counts issues, then
+    the exact bottom-n selection and the scrub projection.  All
+    aggregations are map-side partial; nothing wide shuffles.
 
     Cache ownership: the scored frame stays persisted for the session
     (the returned DataFrame reads it lazily — unpersisting here would
@@ -213,16 +140,6 @@ def caption_scores(
     """
     import time as _time
 
-    if "label" in df.columns and "pred_probs" in df.columns:
-        # fast path: features + pseudo-labels already computed upstream
-        # (e.g. inside the decode_scan Arrow pass — text.fast)
-        feats = df
-    else:
-        # one Arrow stage instead of ~10 interpreted Catalyst
-        # projections (text.fast twin — measured 3.7 s -> see
-        # OPTIMIZATION_r06.md; the Catalyst builders remain the oracle-
-        # parity / streaming path in _features/_with_label_and_probs)
-        feats = _fast_label_frame(df, text_col)
     feats = feats.persist()
 
     _t0 = _time.time()
@@ -290,54 +207,59 @@ def run_image_caption_quality(
 
     Plan shape (100 TB design):
       1. ONE scan: the decode mapInPandas emits narrow columns + stats
-         together — ``bytes`` dies at the scan, no join needed;
-      2. caption scoring on the narrow projection (codegen projections
-         + two tiny aggs + exact bottom-n);
+         + caption features and pseudo-labels together — ``bytes`` dies
+         at the scan, each row crosses into Python once, no join needed;
+      2. caption scoring on the narrow projection (two tiny aggs +
+         exact bottom-n);
       3. drop_reason taxonomy feeds the lineage counters.
     """
-    from .images.decode import decode_and_project, with_image_issues
+    from .images.decode import decode_and_project
 
-    projected = with_image_issues(decode_and_project(df))
-    joined = caption_scores(projected, id_col=id_col, text_col=text_col)
-    return _finalize_image_output(joined, id_col)
+    return _score_images(decode_and_project(df, text_col), id_col, text_col)
 
 
 def run_image_caption_quality_from_path(
     spark, path: str, id_col: str = "image_id", text_col: str = "caption",
-    fast_captions: bool = True, stage_times: dict | None = None,
+    stage_times: dict | None = None,
 ) -> DataFrame:
     """Like :func:`run_image_caption_quality` but scanning the parquet
     corpus with the python-native reader (images.decode.decode_scan) so
-    the binary payload never crosses the JVM↔Python boundary.
-
-    ``fast_captions=True`` additionally computes the caption features +
-    pseudo-labels inside the same Arrow pass (text.fast) — the
-    north-star dataflow: decode, langid, perplexity and heuristics all
-    in one vectorized Python stage, keep/drop + scrub in Catalyst.
+    the binary payload never crosses the JVM↔Python boundary.  The scan
+    scores the ``caption`` column; ``stage_times`` as in
+    :func:`_score_labeled`.
     """
-    from .images.decode import decode_scan, with_image_issues
+    from .images.decode import decode_scan
 
+    if text_col != "caption":
+        raise ValueError(
+            f"the python-native scan scores the 'caption' column, not "
+            f"{text_col!r}; use run_image_caption_quality for other columns"
+        )
     # decode_scan already sizes its task count to the cluster; an extra
     # ensure_parallelism here costs a ~3 s .rdd partition probe on the
     # python-source plan and never changes the layout.
-    scanned = decode_scan(spark, path, with_caption_features=fast_captions)
-    projected = with_image_issues(scanned)
+    scanned = decode_scan(spark, path, with_caption_features=True)
+    return _score_images(scanned, id_col, text_col, stage_times)
+
+
+def _score_images(
+    scanned: DataFrame, id_col: str, text_col: str, stage_times: dict | None = None
+) -> DataFrame:
+    """The body both image routes share after their decode stage."""
+    from .images.decode import with_image_issues
+
     # project down to what the scoring passes + final output actually
-    # read BEFORE the persist: caption_scores caches its input frame,
+    # read BEFORE the persist: _score_labeled caches its input frame,
     # and caching all ~31 scan columns (w/h/fmt/phash/raw feature
     # ratios/...) materialises ~2.5x the bytes the pipeline ever
     # consumes again (guide §2.3 "project before the exchange" — the
     # cache write is the exchange here)
-    needed = [
+    projected = with_image_issues(scanned).select(
         id_col, text_col, "decode_ok", "fmt_ok", "psnr_db", "brightness",
         "is_dark", "is_light", "is_low_information", "is_blurry",
-    ]
-    if fast_captions:
-        needed += ["label", "pred_probs"]
-    projected = projected.select(*needed)
-    joined = caption_scores(
-        projected, id_col=id_col, text_col=text_col, stage_times=stage_times
+        "label", "pred_probs",
     )
+    joined = _score_labeled(projected, id_col, text_col, stage_times)
     return _finalize_image_output(joined, id_col)
 
 

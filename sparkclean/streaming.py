@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
-from .pipeline import NUM_CLASSES, _features, _with_label_and_probs
+from .pipeline import NUM_CLASSES, _fast_label_frame
 from .quality.scores import predicted_label, self_confidence
 from .text.scrub import scrub_col
 
@@ -51,10 +51,11 @@ def score_stream(
     text_col: str = "caption",
 ) -> DataFrame:
     """Stateless streaming pass 2: features → pseudo-labels → scores →
-    scrub, with frozen thresholds. Pure projections — no state store,
-    no shuffle; watermark/window counters can be layered by the caller.
+    scrub, with frozen thresholds. Narrow stages only (one Arrow map,
+    then projections) — no state store, no shuffle; watermark/window
+    counters can be layered by the caller.
     """
-    feats = _with_label_and_probs(_features(stream_df, text_col))
+    feats = _fast_label_frame(stream_df, text_col)
     scored = _score_batch(feats, thresholds)
     return scored.withColumn("scrubbed_text", scrub_col(F.col(text_col)))
 
@@ -82,7 +83,7 @@ class StreamingLabelInspector:
     def process_batch(self, batch_df: DataFrame, text_col: str = "caption") -> DataFrame:
         """Update thresholds from this batch, then score it with the
         post-update state (matches LabelInspector's single-pass mode)."""
-        feats = _with_label_and_probs(_features(batch_df, text_col)).persist()
+        feats = _fast_label_frame(batch_df, text_col).persist()
         rows = (
             feats.groupBy(F.col("label").cast("int").alias("_k"))
             .agg(

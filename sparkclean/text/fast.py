@@ -42,6 +42,15 @@ _LOGP_MEMO_MAX = 1_000_000
 _LOGP_SPAN = LOGP_MAX - LOGP_MIN
 
 
+#: Spark DDL of :func:`caption_columns`' output, in column order
+CAPTION_FIELDS = (
+    "n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"
+    " punct_ratio double, upper_ratio double, repetition_ratio double,"
+    " stopword_ratio double, pred_lang string, ppl double,"
+    " label int, pred_probs array<double>"
+)
+
+
 def _logp(bigram: str) -> float:
     h = int(hashlib.md5(bigram.encode("utf-8")).hexdigest()[:15], 16)
     return LOGP_MIN + (h % RES) / RES * _LOGP_SPAN
@@ -203,3 +212,26 @@ def label_and_probs_batch(feat: dict[str, np.ndarray]) -> tuple[np.ndarray, np.n
         ),
     ).astype(np.int32)
     return label, probs
+
+
+def caption_columns(texts) -> dict:
+    """Every :data:`CAPTION_FIELDS` column for one batch of captions —
+    the ten features, the pseudo-label and pred_probs — with the
+    Catalyst/DuckDB twins' semantics for NULL text: ratios coalesce to
+    0.0, pred_lang is 'und', ppl is the fallback, n_chars/n_words are
+    NULL, and the scorer's f_len term is 1.0 (Spark ``least`` SKIPS
+    nulls: least(NULL, 50)/50 = 1), fed by scoring NULL rows as if they
+    had 50 words.  The one production entry to this module: every
+    caption route calls it, so the routes cannot disagree on NULLs."""
+    texts = pd.Series(texts, dtype=object)
+    feats = caption_features_batch(texts)
+    null_mask = texts.isna().to_numpy()
+    if null_mask.any():
+        nw = feats["n_words"].copy()
+        nw[null_mask] = 50
+        label, probs = label_and_probs_batch({**feats, "n_words": nw})
+        for c in ("n_chars", "n_words"):
+            feats[c] = pd.arrays.IntegerArray(feats[c], null_mask.copy())
+    else:
+        label, probs = label_and_probs_batch(feats)
+    return {**feats, "label": label, "pred_probs": list(probs)}

@@ -152,3 +152,23 @@ def test_identical_phash_group_clusters_completely(spark, hostile_df):
     assert got == expected
     flat_group = expected["flat-00"]
     assert flat_group[0] == "flat-00" and flat_group[1] >= 12
+
+
+def test_decode_scan_names_an_unmappable_column(spark, tmp_path):
+    """A source column Spark has no type for (uint32) fails the
+    python-native scan when it is built, with a ValueError naming the
+    column rather than a bare type error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkclean.images.decode import decode_scan
+
+    iid, blob, w, h, fmt, caption, _ = _hostile_rows()[0]
+    tbl = pa.table({
+        "image_id": [iid], "bytes": [blob], "w": [w], "h": [h], "fmt": [fmt],
+        "caption": [caption], "views": pa.array([7], type=pa.uint32()),
+    })
+    (tmp_path / "corpus").mkdir()
+    pq.write_table(tbl, str(tmp_path / "corpus" / "part-0.parquet"))
+    with pytest.raises(ValueError, match="'views'"):
+        decode_scan(spark, str(tmp_path / "corpus"))

@@ -8,8 +8,13 @@ from pyspark.sql import functions as F
 from sparkclean import synth
 from sparkclean.checkpoint import load_manifest, run_checkpointed
 from sparkclean.images import codec
-from sparkclean.images.decode import decode_stats, phash_duplicate_clusters, with_image_issues
-from sparkclean.pipeline import run_image_caption_quality
+from sparkclean.images.decode import (
+    STATS_FIELDS,
+    decode_and_project,
+    phash_duplicate_clusters,
+    with_image_issues,
+)
+from sparkclean.pipeline import run_image_caption_quality, run_image_caption_quality_from_path
 
 N = 600
 
@@ -17,6 +22,20 @@ N = 600
 @pytest.fixture(scope="module")
 def corpus(spark):
     return synth.synth_images(spark, N, with_images=True, partitions=4).cache()
+
+
+@pytest.fixture(scope="module")
+def corpus_path(corpus, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("images") / "corpus")
+    corpus.repartition(8).write.parquet(path)
+    return path
+
+
+def _stats(df):
+    """image_id + the per-image decode stats, from the DataFrame route."""
+    return decode_and_project(df).select(
+        "image_id", *[f.split()[0] for f in STATS_FIELDS.split(", ")]
+    )
 
 
 def test_codec_roundtrip_and_psnr():
@@ -54,7 +73,7 @@ def test_synth_schema_and_determinism(spark, corpus):
 
 
 def test_decode_stats_validation(spark, corpus):
-    stats = with_image_issues(decode_stats(corpus)).cache()
+    stats = with_image_issues(_stats(corpus)).cache()
     n = stats.count()
     assert n == N
     agg = stats.agg(
@@ -78,7 +97,7 @@ def test_decode_matches_local_reference(spark, corpus):
     sample = corpus.limit(20).collect()
     stats = {
         r["image_id"]: r
-        for r in decode_stats(spark.createDataFrame(sample, corpus.schema)).collect()
+        for r in _stats(spark.createDataFrame(sample, corpus.schema)).collect()
     }
     for row in sample:
         px, fmt = codec.decode(bytes(row["bytes"]))
@@ -120,51 +139,78 @@ def test_image_caption_pipeline(spark, corpus):
     assert leaked == 0
 
 
-def test_decode_scan_matches_dataframe_path(spark, corpus, tmp_path):
+def test_decode_scan_matches_dataframe_path(spark, corpus, corpus_path, tmp_path):
     """The python-native parquet scan must produce identical pipeline
-    output to the JVM-scan path."""
-    from sparkclean.pipeline import run_image_caption_quality_from_path
-
-    path = str(tmp_path / "corpus")
-    corpus.repartition(8).write.parquet(path)
-    a = (
-        run_image_caption_quality(spark.read.parquet(path))
-        .orderBy("image_id")
-        .collect()
+    output to the JVM-scan path — also for NULL and empty captions."""
+    blank = (
+        corpus.withColumn(
+            "caption",
+            F.when(F.crc32("image_id") % 7 == 0, F.lit(None).cast("string"))
+            .when(F.crc32("image_id") % 7 == 1, F.lit(""))
+            .otherwise(F.col("caption")),
+        )
     )
-    b = run_image_caption_quality_from_path(spark, path).orderBy("image_id").collect()
-    assert len(a) == len(b) == N
-    for ra, rb in zip(a, b):
-        assert ra == rb
+    blank_path = str(tmp_path / "blank_captions")
+    blank.repartition(8).write.parquet(blank_path)
+    for path in (corpus_path, blank_path):
+        a = (
+            run_image_caption_quality(spark.read.parquet(path))
+            .orderBy("image_id")
+            .collect()
+        )
+        b = run_image_caption_quality_from_path(spark, path).orderBy("image_id").collect()
+        assert len(a) == len(b) == N
+        for ra, rb in zip(a, b):
+            assert ra == rb
+    assert spark.read.parquet(blank_path).where("caption IS NULL").count() > 0
 
 
-def test_fast_caption_path_matches_sql_path(spark, corpus, tmp_path):
-    """The Arrow-batch caption scorer (text.fast) must agree with the
-    Catalyst SQL path: identical labels/keep/scrub, scores to 1e-9."""
-    from sparkclean.pipeline import run_image_caption_quality_from_path
+def test_fast_caption_path_matches_sql_path(spark, corpus_path):
+    """The image route's caption scoring (text.fast, fused into the
+    decode stage) must agree with the DuckDB twin of the caption
+    pipeline (pipeline.oracle_sql_for) over the same (image_id, caption)
+    rows: identical labels/issue flags/keep/scrub, scores to 1e-6."""
+    import duckdb
 
-    path = str(tmp_path / "corpus_fast")
-    corpus.repartition(8).write.parquet(path)
-    slow = {
-        r["image_id"]: r
-        for r in run_image_caption_quality_from_path(
-            spark, path, fast_captions=False
-        ).collect()
-    }
+    from sparkclean.pipeline import oracle_sql_for
+
     fast = {
         r["image_id"]: r
-        for r in run_image_caption_quality_from_path(
-            spark, path, fast_captions=True
-        ).collect()
+        for r in run_image_caption_quality_from_path(spark, corpus_path).collect()
     }
-    assert set(slow) == set(fast) and len(slow) == N
-    for k, a in slow.items():
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW captions AS SELECT image_id, caption"
+        f" FROM read_parquet('{corpus_path}/*.parquet')"
+    )
+    cur = con.execute(oracle_sql_for("captions", "image_id", "caption"))
+    names = [d[0] for d in cur.description]
+    sql = {r[0]: dict(zip(names, r)) for r in cur.fetchall()}
+    assert set(sql) == set(fast) and len(sql) == N
+    for k, a in sql.items():
         b = fast[k]
         assert a["label"] == b["label"], k
-        assert a["keep"] == b["keep"], k
+        # the image route's keep also needs the image gates to pass
+        image_ok = b["drop_reason"] not in ("decode_failed", "fmt_mismatch", "low_psnr")
+        assert b["keep"] == (a["keep"] and image_ok), k
         assert a["is_label_issue"] == b["is_label_issue"], k
         assert a["scrubbed_text"] == b["scrubbed_text"], k
         assert abs(a["quality_score"] - b["quality_score"]) <= 1e-6, k
+
+
+def test_each_image_route_runs_one_python_map(spark, corpus_path):
+    """Decode and caption scoring are one fused Python stage: the
+    executed plan of each image route holds exactly one MapInPandas
+    node (an adaptive plan prints a node in both its initial and final
+    plan, so nodes are counted by their distinct plan lines)."""
+    for scored in (
+        run_image_caption_quality(spark.read.parquet(corpus_path)),
+        run_image_caption_quality_from_path(spark, corpus_path),
+    ):
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        nodes = {ln[ln.index("MapInPandas"):] for ln in plan.splitlines() if "MapInPandas" in ln}
+        assert len(nodes) == 1, plan
+    spark.catalog.clearCache()
 
 
 def test_checkpoint_resume(spark, corpus, tmp_path):
@@ -239,7 +285,7 @@ def test_phash_near_duplicates_on_decoded_corpus(spark, corpus):
         phash_near_duplicates,
     )
 
-    stats = decode_stats(corpus).select("image_id", "phash_recomputed")
+    stats = _stats(corpus).select("image_id", "phash_recomputed")
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in phash_near_duplicates(
@@ -294,7 +340,7 @@ def test_failed_decodes_get_null_phash_not_sentinel(spark):
     df = spark.createDataFrame(
         rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
     )
-    stats = decode_stats(df).cache()
+    stats = _stats(df).cache()
     got = {r["image_id"]: r["phash_recomputed"] for r in stats.collect()}
     assert got["ok_1"] is not None and got["ok_1"] == got["ok_2"]
     for bad in ("null_1", "null_2", "corrupt_1", "corrupt_2"):

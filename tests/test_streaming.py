@@ -41,9 +41,9 @@ def test_score_stream_available_now(spark, corpus, tmp_path):
     """Real streaming query: parquet source → stateless scoring →
     memory sink, one availableNow trigger."""
     static = spark.read.parquet(corpus)
-    from sparkclean.pipeline import _features, _with_label_and_probs
+    from sparkclean.pipeline import _fast_label_frame
 
-    feats = _with_label_and_probs(_features(static, "caption"))
+    feats = _fast_label_frame(static, "caption")
     thresholds = get_confident_thresholds(feats, 3)
 
     stream = spark.readStream.schema(static.schema).parquet(corpus)
@@ -88,11 +88,11 @@ def test_foreachbatch_end_to_end(spark, corpus, tmp_path):
 def test_stateful_language_stats(spark, corpus, tmp_path):
     """applyInPandasWithState operator: running per-language stats
     survive across micro-batches and match the batch-oblivious truth."""
-    from sparkclean.pipeline import _features, _with_label_and_probs
+    from sparkclean.pipeline import _fast_label_frame
     from sparkclean.streaming import score_stream, stateful_language_stats
 
     static = spark.read.parquet(corpus)
-    feats = _with_label_and_probs(_features(static, "caption"))
+    feats = _fast_label_frame(static, "caption")
     thresholds = get_confident_thresholds(feats, 3)
 
     stream = spark.readStream.schema(static.schema).option(

@@ -190,10 +190,9 @@ def test_tokenizer_twin_on_adversarial_whitespace(spark, duck):
 
 def test_fast_features_match_catalyst_on_adversarial_whitespace(spark):
     """The Arrow fast scorer must produce the SAME word-derived features
-    as the Catalyst path on whitespace-adversarial captions (round-3
+    as the Catalyst builders on whitespace-adversarial captions (round-3
     review: str.strip()/str.split() silently diverged)."""
-    from sparkclean.pipeline import _features
-    from sparkclean.text.fast import caption_features_batch
+    from sparkclean.text.fast import caption_columns
 
     cases = [
         "\tthe quick brown fox jumps",
@@ -206,14 +205,43 @@ def test_fast_features_match_catalyst_on_adversarial_whitespace(spark):
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i: int, text: string")
     cat = {
         r["i"]: r
-        for r in _features(df, "text")
-        .select("i", "n_words", "repetition_ratio", "stopword_ratio", "pred_lang", "ppl")
+        for r in rules.with_quality_features(df, "text")
+        .select(
+            "i", "n_words", "repetition_ratio", "stopword_ratio",
+            langid.langid_markers_col(F.col("text")).alias("pred_lang"),
+            ppl.ppl_hash_col(F.col("text")).alias("ppl"),
+        )
         .collect()
     }
-    fast = caption_features_batch(pd.Series(cases))
+    fast = caption_columns(pd.Series(cases))
     for i in range(len(cases)):
         assert fast["n_words"][i] == cat[i]["n_words"], (i, cases[i])
         np.testing.assert_allclose(fast["repetition_ratio"][i], cat[i]["repetition_ratio"], rtol=1e-9)
         np.testing.assert_allclose(fast["stopword_ratio"][i], cat[i]["stopword_ratio"], rtol=1e-9)
         assert fast["pred_lang"][i] == cat[i]["pred_lang"], (i, cases[i])
         np.testing.assert_allclose(fast["ppl"][i], cat[i]["ppl"], rtol=1e-9)
+
+
+def test_caller_label_columns_do_not_bypass_scoring(spark):
+    """Label/pred_probs columns the caller brings are replaced by the
+    computed ones: run_caption_quality returns the same rows as on the
+    bare documents, so a French caption stays label=2 and is dropped."""
+    from sparkclean.pipeline import run_caption_quality
+
+    texts = [
+        "a clear photo of a red vintage car parked near the beach",
+        "le chat est sur la table et le chien dort dans la maison",
+        "the the the the the the",
+        "12345 678 910 1112 1314",
+        "two dogs are playing with a ball in the green park today",
+        None,
+        "",
+    ]
+    bare = spark.createDataFrame(list(enumerate(texts)), "doc_id: int, text: string")
+    dressed = bare.withColumn("label", F.lit(0)).withColumn(
+        "pred_probs", F.array(F.lit(0.9), F.lit(0.05), F.lit(0.05))
+    )
+    a = run_caption_quality(bare).orderBy("doc_id").collect()
+    b = run_caption_quality(dressed).orderBy("doc_id").collect()
+    assert a == b
+    assert a[1]["label"] == 2 and not a[1]["keep"]
